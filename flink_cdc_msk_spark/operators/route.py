@@ -92,7 +92,15 @@ def _make_trunc_udf(routing: TableRouting, always: bool):
             if not c and not always:
                 out.append(ln)
                 continue
-            obj = json.loads(ln)
+            try:
+                obj = json.loads(ln)
+            except ValueError:
+                # a line Spark's lenient from_json routed but Python's
+                # strict parser rejects (single quotes, trailing garbage,
+                # concatenated objects) is forwarded unchanged, never
+                # allowed to fail the whole job
+                out.append(ln)
+                continue
             if c:
                 side = "before" if o == "d" else "after"
                 target = obj.get(side)
@@ -362,7 +370,7 @@ def route_mysql_cdc(
     out = df.withColumns(
         {"partition_key": partition_key, "value_out": value_out}
     )
-    return _finish(out, topic, topic_prefix, num_partitions)
+    return _finish(out, value_col, topic, topic_prefix, num_partitions)
 
 
 def route_mongo_cdc(
@@ -403,11 +411,15 @@ def route_mongo_cdc(
     out = df.withColumns(
         {"partition_key": partition_key, "value_out": F.col(value_col)}
     )
-    return _finish(out, topic, topic_prefix, num_partitions)
+    return _finish(out, value_col, topic, topic_prefix, num_partitions)
 
 
 def _finish(
-    df: DataFrame, topic: str, topic_prefix: str, num_partitions: int | None
+    df: DataFrame,
+    value_col: str,
+    topic: str,
+    topic_prefix: str,
+    num_partitions: int | None,
 ) -> DataFrame:
     # A27: dynamic topic = prefix + lower(db) when prefix set, else fixed
     # topic (FlinkCDCSimpleTopicSelector.scala:8-12; selection scala:191-220).
@@ -427,17 +439,19 @@ def _finish(
     out_cols = ["db", "table", "partition_key", "topic"] + (
         ["partition"] if num_partitions is not None else []
     ) + ["value"]
-    # A21: trailing null guard (emr/MySQLCDC2AWSMSK.scala:160). Unroutable
-    # lines (no JSON, no source block) SURVIVE with null db/table/topic —
-    # the reference's Gson parse would throw and fail the job; here the
-    # caller quarantines or drops them (query cdc_route_malformed pins the
-    # drop). Deliberately NOT filtered here: any predicate on the derived
-    # columns is pushed below this projection with the whole from_json
-    # inlined (PushPredicateThroughProject splits conjunctions, and
-    # nondeterministic barriers don't stop the inferred-constraint copies)
-    # — measured 2.5× on the route hot path.
+    # A21: null guard (emr/MySQLCDC2AWSMSK.scala:160). Unroutable lines
+    # (no JSON, no source block) SURVIVE with null db/table/topic — the
+    # reference's Gson parse would throw and fail the job; here the caller
+    # quarantines or drops them (query cdc_route_malformed pins the drop).
+    # The guard reads the INPUT column, not the derived ``value``: every
+    # mode yields a null output value exactly when the input line is null,
+    # and a predicate on a derived column is pushed below the projection
+    # with its whole expression inlined (PushPredicateThroughProject) —
+    # the from_json chain (measured 2.5x on the route hot path) or, in the
+    # pandas mode, a second ArrowEvalPython running the truncation UDF
+    # twice per row.
     return (
-        df.withColumns(cols)
+        df.filter(F.col(value_col).isNotNull())
+        .withColumns(cols)
         .select(*out_cols)
-        .filter(F.col("value").isNotNull())
     )

@@ -7,15 +7,16 @@ the streaming twin of plans/cdc_queries.cdc_latest_state.
 
 The local sink is a parquet directory rewritten per batch (fine for tests;
 the batch is the unit of atomicity). On a production lake the body of
-``_merge_batch`` becomes a MERGE INTO against Delta/Iceberg/Hudi — the
-dataflow (group to latest per key inside the batch, then upsert) is
-identical, and that per-batch pre-compaction is what keeps the MERGE's
-shuffle proportional to the *batch*, not the table.
+``_merge_bucketed`` becomes a MERGE INTO against Delta/Iceberg/Hudi — the
+dataflow (latest change per key over the touched part of the state plus
+the batch, then upsert) is identical, and reading only the buckets the
+batch touches is what keeps the merge proportional to the *batch*, not
+the table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -66,6 +67,21 @@ def read_parquet_or_none(spark, path: str) -> DataFrame | None:
         raise
 
 
+def cache_with_touched_buckets(changes: DataFrame) -> tuple[DataFrame, list]:
+    """Cache ``changes`` (which carry a ``bucket`` column) and return it
+    with the sorted list of buckets it touches. ONE action both fills the
+    cache and names the buckets: a ``noop`` write of the cached frame with
+    an ``Observation`` of ``collect_set(bucket)`` riding along. For changes
+    that are a narrow map of the batch that is one stage, where a separate
+    ``distinct().collect()`` would add a shuffle. The caller unpersists."""
+    changes = changes.cache()
+    seen = Observation()
+    changes.observe(seen, F.collect_set("bucket").alias("buckets")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    return changes, sorted(seen.get["buckets"])
+
+
 def stage_and_swap_buckets(path: str, live: DataFrame, touched) -> None:
     """Stage ONLY the touched pk-hash buckets of a state table, then swap
     each bucket dir in: replaced buckets point at the staged write; a
@@ -92,12 +108,29 @@ class ParquetUpsertSink:
     """foreachBatch target: maintains a latest-state parquet table.
 
     ``num_buckets=N`` partitions the state table by ``pmod(xxhash64(pk),
-    N)`` and each batch rewrites ONLY the buckets containing changed keys
-    (dynamic partition overwrite + partition-pruned read of the current
-    state). With B buckets and a batch touching k of them, merge I/O drops
-    from O(table) to O(table·k/B) — the property that keeps continuous
+    N)`` and each batch rewrites ONLY the buckets containing changed keys.
+    With B buckets and a batch touching k of them, merge I/O drops from
+    O(table) to O(table·k/B) — the property that keeps continuous
     compaction affordable when the table is 1000× the batch. ``None``
-    keeps the simple full-rewrite (fine for small state)."""
+    keeps the simple full-rewrite (fine for small state).
+
+    A bucketed merge is three Spark jobs:
+
+    1. parse the batch's changes, tag each with its bucket and cache them;
+       the one single-stage action that fills the cache also names the
+       touched buckets (:func:`cache_with_touched_buckets`);
+    2. read the touched buckets of the state (partition-pruned, with the
+       schema this sink last wrote, so no schema-inference job), union the
+       changes and shuffle once with ``repartition(k, "bucket")``;
+    3. keep the newest row per key with a window on ``(bucket, *pk)`` —
+       the shuffle already clusters it, so each of the k tasks windows and
+       writes whole buckets — and stage the touched buckets, then swap
+       them in (:func:`stage_and_swap_buckets`; a touched bucket whose
+       keys are all deleted is removed).
+
+    The final window alone keeps the newest change per key, first batch
+    included, so the batch is not pre-reduced — except before a
+    ``transform``, which sees the latest change per key only."""
 
     def __init__(
         self,
@@ -128,6 +161,7 @@ class ParquetUpsertSink:
         self.num_buckets = num_buckets
         self.transform = transform
         self.retain_tombstones = retain_tombstones
+        self._schema = None  # schema of the state this sink last wrote
 
     def _bucket(self) -> F.Column:
         return F.pmod(
@@ -137,18 +171,25 @@ class ParquetUpsertSink:
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        changes = latest_per_key(
-            parse_change_events(batch, self.pk_cols), self.pk_cols
-        )
+        changes = parse_change_events(batch, self.pk_cols)
         if self.transform is not None:
-            changes = self.transform(changes)
+            changes = self.transform(latest_per_key(changes, self.pk_cols))
         if self.num_buckets is None:
             self._merge_full(spark, changes)
         else:
             self._merge_bucketed(spark, changes)
 
     def _read_current(self, spark) -> DataFrame | None:
-        return read_parquet_or_none(spark, self.path)
+        if self._schema is None:
+            return read_parquet_or_none(spark, self.path)
+        return spark.read.schema(self._schema).parquet(self.path)
+
+    def _live(self, merged: DataFrame) -> DataFrame:
+        return (
+            merged
+            if self.retain_tombstones
+            else merged.filter(F.col("op") != "d")
+        )
 
     def _swap_in(self, stage: str) -> None:
         """Atomically (rename-level) replace the table dir with the staged
@@ -168,41 +209,36 @@ class ParquetUpsertSink:
 
     def _merge_full(self, spark, changes: DataFrame) -> None:
         current = self._read_current(spark)
-        merged = (
-            changes
-            if current is None
-            else latest_per_key(current.unionByName(changes), self.pk_cols)
-        )
-        live = (
-            merged
-            if self.retain_tombstones
-            else merged.filter(F.col("op") != "d")
-        )
+        if current is not None:
+            changes = current.unionByName(changes)
+        live = self._live(latest_per_key(changes, self.pk_cols))
         # stage to a NEW dir (the plan still reads the live table), then swap
         stage = f"{self.path}__stage"
         live.write.mode("overwrite").parquet(stage)
         self._swap_in(stage)
+        self._schema = live.schema
 
     def _merge_bucketed(self, spark, changes: DataFrame) -> None:
-        changes = changes.withColumn("bucket", self._bucket()).cache()
-        touched = [r.bucket for r in changes.select("bucket").distinct().collect()]
-        current = self._read_current(spark)
-        if current is None:
-            merged = changes
-        else:
-            merged = latest_per_key(
-                current.filter(
-                    F.col("bucket").isin(touched)  # partition-pruned read
-                ).unionByName(changes),
-                self.pk_cols,
-            )
-        live = (
-            merged
-            if self.retain_tombstones
-            else merged.filter(F.col("op") != "d")
+        changes, touched = cache_with_touched_buckets(
+            changes.withColumn("bucket", self._bucket())
         )
         try:
+            if not touched:
+                return
+            merged = changes
+            current = self._read_current(spark)
+            if current is not None:
+                merged = current.filter(
+                    F.col("bucket").isin(touched)  # partition-pruned read
+                ).unionByName(changes)
+            live = self._live(
+                latest_per_key(
+                    merged.repartition(len(touched), "bucket"),
+                    ["bucket", *self.pk_cols],
+                )
+            )
             stage_and_swap_buckets(self.path, live, touched)
+            self._schema = live.schema
         finally:
             changes.unpersist()
 
@@ -242,14 +278,11 @@ class Scd2IntervalSink:
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         self.batch_ids.append(batch_id)
-        changes = (
-            parse_change_events(batch, self.pk_cols)
-            .withColumn("bucket", self._bucket())
-            .cache()
+        changes, touched = cache_with_touched_buckets(
+            parse_change_events(batch, self.pk_cols).withColumn(
+                "bucket", self._bucket()
+            )
         )
-        touched = [
-            r.bucket for r in changes.select("bucket").distinct().collect()
-        ]
         if not touched:
             changes.unpersist()
             return

@@ -125,3 +125,42 @@ def test_arrow_wide_entries_bit_identical_to_fold(spark):
         map(str, fold.select(*cols).distinct().collect())
     )
     assert a == b
+
+
+@pytest.mark.parametrize("gn", [257, 513])
+def test_bucket_blas_pairs_planted_bucket_matches_brute_force(spark, gn):
+    """The grouped-numpy verify walks each bucket in chunks of 256 rows.
+    A bucket of 256·m + 1 rows has one row past the last full chunk; rows
+    in a bucket are not ordered by id, so that row can hold the smaller
+    id of its pairs and must be a chunk row itself. Planted here as the
+    last row with the smallest id, checked against brute force."""
+    import numpy as np
+
+    rng = np.random.default_rng(gn)
+    d = 4
+    # two tight clusters: intra-cluster cosines > 0.95, inter < 0.2, so
+    # no pair sits near the threshold
+    axis = np.where(np.arange(gn) % 2 == 0, 0, 1)
+    V = rng.normal(0.0, 0.02, (gn, d))
+    V[np.arange(gn), axis] += 1.0
+    ids = np.arange(gn, 0, -1, dtype=np.int64) * 10  # descending ids
+    rows = [
+        (int(ids[i]), [float(x) for x in V[i]],
+         float(np.sqrt((V[i] * V[i]).sum())), 0, 0)
+        for i in range(gn)
+    ]
+    entries = spark.createDataFrame(
+        rows, "id long, v array<double>, nv double, table int, bucket int"
+    ).coalesce(1)
+    got = {(r.id1, r.id2) for r in S._bucket_blas_pairs(
+        entries, n_tables=1, threshold=0.9
+    ).collect()}
+
+    U = V / np.linalg.norm(V, axis=1, keepdims=True)
+    cos = U @ U.T
+    ii, jj = np.nonzero((ids[:, None] < ids[None, :]) & (cos >= 0.9))
+    expect = {(int(ids[i]), int(ids[j])) for i, j in zip(ii, jj)}
+    assert np.abs(cos - 0.9).min() > 0.05
+    smallest = int(ids.min())
+    assert any(p[0] == smallest for p in expect)
+    assert got == expect

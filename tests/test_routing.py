@@ -710,7 +710,44 @@ def test_jvm_mode_plan_has_no_python(spark):
     pd_plan = route_mysql_cdc(
         df, ROUTING, topic_prefix="cdc_", num_partitions=12
     )._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in pd_plan
+    # the pandas mode runs the truncation UDF once per row: a null guard
+    # on the derived value would be pushed below the projection and add
+    # a second ArrowEvalPython evaluating the same UDF
+    assert pd_plan.count("ArrowEvalPython") == 1, pd_plan
+    no_trunc = TableRouting.parse(
+        json.dumps([{"db": "test_db", "table": "product", "primary_key": "pid"}])
+    )
+    plain_plan = route_mysql_cdc(
+        df, no_trunc, topic_prefix="cdc_", num_partitions=12
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plain_plan, plain_plan
+
+
+def test_truncation_forwards_lines_python_json_rejects(spark):
+    """Spark's from_json accepts lines Python's json.loads rejects. On a
+    truncating table each used to fail the whole job with JSONDecodeError;
+    now each reaches the output once, unchanged, and the batch's normal
+    row is still truncated."""
+    good = mysql_event(table="product_01", after={"pid": 1, "col1": "x" * 15})
+    single_quoted = mysql_event(
+        table="product_01", after={"pid": 2, "col1": "y" * 15}
+    ).replace('"', "'")
+    trailing = (
+        mysql_event(table="product_01", after={"pid": 3, "col1": "z" * 15})
+        + " trailing garbage"
+    )
+    concatenated = mysql_event(
+        table="product_01", after={"pid": 4, "col1": "w" * 15}
+    ) + mysql_event(table="product_01", after={"pid": 5, "col1": "v" * 15})
+    lenient = [single_quoted, trailing, concatenated]
+    rows = route(spark, [good, *lenient])
+    assert sorted(r.value for r in rows) == sorted(
+        [json.dumps(json.loads(good) | {
+            "after": {"pid": 1, "col1": "x" * 10}
+        }, separators=(",", ":")), *lenient]
+    )
+    for r in rows:  # Spark routed every one of them to the truncating rule
+        assert (r.db, r.table) == ("test_db", "product_01")
 
 
 def test_payload_schema_drift_guard(spark):

@@ -6,6 +6,7 @@ compaction, checkpoint restart, restart supervisor.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import tempfile
 
@@ -267,26 +268,118 @@ def test_foreach_batch_compaction(spark, tmpdir):
     assert ups == 150 - 75  # %10==0 updated, half of those (%20==0) deleted
 
 
+def _change(op, key, ts, note=None):
+    """One Debezium change of ``orders`` keyed by o_orderkey."""
+    row = {"o_orderkey": key, "note": note}
+    return json.dumps(
+        {
+            "before": row if op == "d" else None,
+            "after": row if op != "d" else None,
+            "source": {"db": "test_db", "table": "orders"},
+            "op": op,
+            "ts_ms": ts,
+        }
+    )
+
+
+def _state_rows(spark, path):
+    return sorted(
+        (r.o_orderkey, r.op, r.ts_ms, tuple(sorted(r.payload.items())))
+        for r in spark.read.parquet(path)
+        .select("o_orderkey", "op", "ts_ms", "payload")
+        .collect()
+    )
+
+
 def test_bucketed_compaction_matches_full(spark, tmpdir):
     """Partition-aware upsert (rewrite only touched pk-hash buckets) must
-    produce exactly the same live state as the full-rewrite sink."""
-    events = synthesize_mysql_events(spark, SF_SMALL, with_updates=True)
-    src = f"{tmpdir}/cdc_b"
-    snapshot_then_stream_paths(events, src)
-    stream = spark.readStream.format("text").load(src)
-    sink = ParquetUpsertSink(f"{tmpdir}/state_b", ["o_orderkey"], num_buckets=8)
-    q = start_compaction_stream(
-        stream, sink, f"{tmpdir}/ckpt_compact_b", available_now=True
-    )
-    q.awaitTermination(180)
+    produce exactly the same state rows as the full-rewrite sink, batch
+    after batch: a first batch, several changes to one key inside a
+    batch, a bucket whose keys are all deleted — once dropping deletes,
+    once with the tombstone-keeping merge."""
+    keys = [str(k) for k in range(40)]
+    first = [_change("c", k, 10, f"v0-{k}") for k in keys]
+    # key 7 changes three times inside one batch (out of ts order in the
+    # batch), key 8 is updated then deleted, key 9 deleted then re-created
+    churn = [
+        _change("u", "7", 23, "v3"),
+        _change("u", "7", 21, "v1"),
+        _change("u", "7", 22, "v2"),
+        _change("u", "8", 21, "v1"),
+        _change("d", "8", 22, "v1"),
+        _change("d", "9", 21, "v0-9"),
+        _change("c", "9", 22, "again"),
+        _change("c", "100", 21, "new"),
+    ]
+    for retain in (False, True):
+        full = ParquetUpsertSink(
+            f"{tmpdir}/full_{retain}", ["o_orderkey"],
+            retain_tombstones=retain,
+        )
+        path = f"{tmpdir}/bucketed_{retain}"
+        bucketed = ParquetUpsertSink(
+            path, ["o_orderkey"], num_buckets=8, retain_tombstones=retain
+        )
+        # every live key of one bucket is deleted in the third batch (a
+        # bucket clear of the keys the churn batch leaves live)
+        b = bucketed._bucket()
+        probe = spark.createDataFrame(
+            [(k,) for k in [*keys, "100"]], "o_orderkey string"
+        ).select("o_orderkey", b.alias("b"))
+        by_bucket: dict = {}
+        for r in probe.collect():
+            by_bucket.setdefault(r.b, []).append(r.o_orderkey)
+        victim_bucket, victims = next(
+            (vb, ks) for vb, ks in sorted(by_bucket.items())
+            if not {"7", "9", "100"} & set(ks)
+        )
+        late = next(k for k in keys if k not in victims)
+        batches = [
+            first,
+            churn,
+            [_change("d", k, 30, f"v0-{k}") for k in victims],
+            [_change("u", late, 40, "late")],
+        ]
+        for i, lines in enumerate(batches):
+            batch = spark.createDataFrame([(l,) for l in lines], "value string")
+            full(batch, i)
+            bucketed(batch, i)
+            assert _state_rows(spark, path) == _state_rows(
+                spark, f"{tmpdir}/full_{retain}"
+            ), (retain, i)
 
-    got = spark.read.parquet(f"{tmpdir}/state_b")
-    assert got.count() == 1500 - 75
-    assert got.filter(F.col("op") == "u").count() == 150 - 75
-    # bucket layout exists and covers the keyspace
-    import os
+        got = {r[0]: r for r in _state_rows(spark, path)}
+        assert got["7"][2] == 23 and dict(got["7"][3])["note"] == "v3"
+        assert dict(got["9"][3])["note"] == "again"
+        assert dict(got[late][3])["note"] == "late"
+        for k in ["8", *victims]:
+            assert (got[k][1] == "d") if retain else (k not in got)
+        # without tombstones the emptied bucket's directory is removed
+        assert os.path.exists(f"{path}/bucket={victim_bucket}") == retain
 
-    assert any(d.startswith("bucket=") for d in os.listdir(f"{tmpdir}/state_b"))
+
+def test_bucketed_compaction_job_budget(spark, tmpdir):
+    """Per-batch fixed cost guard: after the first batch a bucketed tail
+    merge runs at most 3 Spark jobs (fill the cached changes + name the
+    touched buckets, the one merge shuffle, the bucket write) — no
+    distinct-collect job and no state schema-inference job."""
+    sc = spark.sparkContext
+    sink = ParquetUpsertSink(f"{tmpdir}/state_j", ["o_orderkey"], num_buckets=8)
+    jobs = []
+    for i in range(2):
+        batch = spark.createDataFrame(
+            [(_change("u", str(k), 10 + i, f"v{i}"),) for k in range(50)],
+            "value string",
+        )
+        group = f"upsert_job_budget_{i}"
+        sc.setJobGroup(group, "bucketed merge")
+        try:
+            sink(batch, i)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] <= 3, jobs
+    assert spark.read.parquet(f"{tmpdir}/state_j").count() == 50
 
 
 def test_bucketed_compaction_empties_fully_deleted_bucket(spark, tmpdir):
